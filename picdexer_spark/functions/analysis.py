@@ -114,16 +114,6 @@ def analyze_py(text: str, stopwords: tuple[str, ...] = ()) -> list[str]:
     return [t for t in _TOKEN_RE.findall(text.lower()) if t not in stop]
 
 
-def duckdb_stopped_tokens_sql(col_sql: str,
-                              stopwords: tuple[str, ...]) -> str:
-    """DuckDB expression for the KEPT token list (oracle side)."""
-    base = f"regexp_extract_all(lower({col_sql}), '{TOKEN_PATTERN}')"
-    if not stopwords:
-        return base
-    lits = ", ".join(f"'{w}'" for w in stopwords)
-    return f"list_filter({base}, t -> t NOT IN ({lits}))"
-
-
 def synonym_classes(
     groups: list[list[str]] | None,
 ) -> dict[str, tuple[str, ...]]:

@@ -56,8 +56,3 @@ def tokens_col(col: Column | str) -> Column:
     return F.filter(
         F.split(F.lower(c), SEPARATOR_PATTERN), lambda x: x != F.lit("")
     )
-
-
-def duckdb_tokens_sql(col_sql: str) -> str:
-    """DuckDB SQL expression producing the identical token list."""
-    return f"regexp_extract_all(lower({col_sql}), '{TOKEN_PATTERN}')"

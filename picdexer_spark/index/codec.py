@@ -187,14 +187,6 @@ def encode_concat(values: np.ndarray, counts: np.ndarray) -> list[bytes]:
     return [bytes(mv[cum[a]:cum[b]]) for a, b in zip(vstart, vend)]
 
 
-def decode_concat(bufs, counts: np.ndarray) -> np.ndarray:
-    """Inverse of :func:`encode_concat`: decode a sequence of varint byte
-    segments (counts[i] values each) in ONE numpy pass. Varint streams are
-    self-delimiting, so decoding the concatenation equals concatenating the
-    decodes; `counts` is only needed by callers to slice the result."""
-    return varint_decode(b"".join(bufs))
-
-
 def segmented_delta_decode(deltas: np.ndarray, seg_counts: np.ndarray,
                            seg_bases: np.ndarray) -> np.ndarray:
     """Decode many delta runs at once: run i has seg_counts[i] values whose

@@ -247,6 +247,3 @@ class OracleIndex:
                 scored.append((d, s))
         scored.sort(key=lambda x: (-x[1], x[0]))
         return scored[:k]
-
-    def extract_tokens(self, text: str) -> list[str]:
-        return tokenize_py(text)

@@ -27,6 +27,7 @@ from __future__ import annotations
 import math
 import os
 import re
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -162,83 +163,90 @@ def _blocks_from_pdf(pdf: pd.DataFrame) -> dict[str, TermBlocks]:
     return blocks
 
 
-def _score_blocks(mode, asc, ordered, blocks, idf_map, avgdl, k_eff, prune,
-                  allowed=None, after=None, groups=None, slop=0, alts=None,
-                  msm=1):
-    if mode == "groups":
-        return score_groups(groups, blocks, idf_map, K1, B, avgdl, k_eff,
-                            prune=prune, allowed=allowed, after=after)
-    if mode in ("synonyms", "synonyms_conj"):
+@dataclass
+class QuerySpec:
+    """One compiled scoring query — the driver-side metadata a per-shard
+    kernel needs. The public query methods compile to this; the scoring
+    pipeline (``SearchEngine._candidates`` -> ``_execute`` -> ``_merge``)
+    consumes it."""
+
+    #: kernel mode (see :func:`_score_blocks`)
+    mode: str
+    #: the scanned (dictionary-present, field-namespaced) terms; for the
+    #: flat modes the deduped ascending set the kernels score. Empty =
+    #: the query has no terms (match_all for the filtered callers)
+    terms: list[str]
+    idf_map: dict[str, float]
+    avgdl: float
+    k: int
+    #: phrase terms in query order (phrase / phrase_prefix modes)
+    ordered: list[str] | None = None
+    #: scored-field posting namespace ("" = the content field)
+    ns: str = ""
+    after: tuple | None = None
+    slop: int = 0
+    msm: int = 1
+    #: CNF groups (mode groups) or [(rep, members)] classes (synonyms)
+    groups: list | None = None
+    #: stem expansions of a phrase_prefix query
+    alts: list[str] | None = None
+    prune: bool = True
+
+    @property
+    def positions(self) -> bool:
+        """Whether the kernel needs the positional payload."""
+        return self.mode in ("phrase", "phrase_prefix")
+
+
+def _score_blocks(spec: QuerySpec, blocks, k_eff, allowed=None):
+    args = (blocks, spec.idf_map, K1, B, spec.avgdl, k_eff)
+    if spec.mode == "groups":
+        return score_groups(spec.groups, *args, prune=spec.prune,
+                            allowed=allowed, after=spec.after)
+    if spec.mode in ("synonyms", "synonyms_conj"):
         # `groups` carries [(rep, members)] synonym classes; idf keyed
         # by rep with BLENDED df (max over members) — see score_synonyms
         return score_synonyms(
-            groups, blocks, idf_map, K1, B, avgdl, k_eff,
-            mode=("conjunctive" if mode == "synonyms_conj"
+            spec.groups, *args,
+            mode=("conjunctive" if spec.mode == "synonyms_conj"
                   else "disjunctive"),
-            allowed=allowed, after=after)
-    if mode == "conjunctive":
-        return score_conjunctive(asc, blocks, idf_map, K1, B, avgdl, k_eff,
-                                 prune=prune, allowed=allowed, after=after)
-    if mode == "phrase":
-        return score_phrase(ordered, blocks, idf_map, K1, B, avgdl, k_eff,
-                            allowed=allowed, after=after, slop=slop)
-    if mode == "phrase_prefix":
-        return score_phrase_prefix(ordered, alts, blocks, idf_map, K1, B,
-                                   avgdl, k_eff, allowed=allowed,
-                                   after=after)
-    return score_disjunctive(asc, blocks, idf_map, K1, B, avgdl, k_eff,
-                             prune=prune, allowed=allowed, after=after,
-                             msm=msm)
+            allowed=allowed, after=spec.after)
+    if spec.mode == "conjunctive":
+        return score_conjunctive(spec.terms, *args, prune=spec.prune,
+                                 allowed=allowed, after=spec.after)
+    if spec.mode == "phrase":
+        return score_phrase(spec.ordered, *args, allowed=allowed,
+                            after=spec.after, slop=spec.slop)
+    if spec.mode == "phrase_prefix":
+        return score_phrase_prefix(spec.ordered, spec.alts, *args,
+                                   allowed=allowed, after=spec.after)
+    return score_disjunctive(spec.terms, *args, prune=spec.prune,
+                             allowed=allowed, after=spec.after,
+                             msm=spec.msm)
 
 
-def _make_shard_scorer(terms, idf_map, k, mode, avgdl, prune,
-                       tomb_counts=None, after=None, groups=None, slop=0,
-                       alts=None, msm=1):
-    """Per-shard exact top-k_eff scorer. `tomb_counts` maps shard_id -> its
+def _make_shard_scorer(spec: QuerySpec, tomb_counts: dict[int, int]):
+    """Per-shard exact top-k_eff scorer ``(blocks pdf, allowed) -> (doc_id,
+    score)``.
+
+    Unfiltered (`allowed` None): `tomb_counts` maps shard_id -> its
     tombstone COUNT (metadata-sized): each shard over-fetches
-    k + |its tombstones|, and the caller anti-joins the chained `deletes`
+    k + |its tombstones|, and the merge anti-joins the chained `deletes`
     table afterwards — EXACT, because any live doc in a shard's true top-k
     sits within the top-(k + |shard tombstones|) of its unfiltered ranking.
-    The tombstone IDS never leave the cluster (no driver collect)."""
-    asc = sorted(set(terms))
-    ordered = list(terms)  # phrase mode needs the original order
-    tomb_counts = tomb_counts or {}
+    The tombstone IDS never leave the cluster (no driver collect).
 
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        blocks = _blocks_from_pdf(pdf)
-        k_eff = k + tomb_counts.get(int(pdf["shard_id"].iat[0]), 0)
-        ids, scores = _score_blocks(mode, asc, ordered, blocks, idf_map,
-                                    avgdl, k_eff, prune, after=after,
-                                    groups=groups, slop=slop, alts=alts,
-                                    msm=msm)
-        return pd.DataFrame({"doc_id": ids, "score": scores})
+    Filtered (`allowed`, the shard's sorted doc-id whitelist): applied
+    INSIDE the kernels before top-k selection (a post-filter over a top-k
+    would be inexact for selective filters). The whitelist comes from the
+    LIVE docs view, so no over-fetch is needed."""
 
-    return score_shard
-
-
-def _make_filtered_shard_scorer(terms, idf_map, k, mode, avgdl, prune,
-                                after=None, groups=None, slop=0, msm=1):
-    """Cogrouped scorer: (candidate blocks of one shard, allowed doc_ids of
-    the same shard) -> exact top-k over the allowed set only. The whitelist
-    is applied INSIDE the kernels before top-k selection (a post-filter
-    over a top-k would be inexact for selective filters); it is bounded per
-    task by shard_range. Tombstoned docs never appear in the whitelist
-    (it is computed from the LIVE docs view), so no over-fetch is needed."""
-    asc = sorted(set(terms))
-    ordered = list(terms)
-
-    def score_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(
-                {"doc_id": np.zeros(0, np.int64),
-                 "score": np.zeros(0, np.float64)}
-            )
-        allowed = np.sort(right["doc_id"].to_numpy(np.uint64))
-        blocks = _blocks_from_pdf(left)
-        ids, scores = _score_blocks(mode, asc, ordered, blocks, idf_map,
-                                    avgdl, k, prune, allowed=allowed,
-                                    after=after, groups=groups, slop=slop,
-                                    msm=msm)
+    def score_shard(pdf: pd.DataFrame, allowed) -> pd.DataFrame:
+        k_eff = spec.k
+        if allowed is None:
+            k_eff += tomb_counts.get(int(pdf["shard_id"].iat[0]), 0)
+        ids, scores = _score_blocks(spec, _blocks_from_pdf(pdf), k_eff,
+                                    allowed)
         return pd.DataFrame({"doc_id": ids, "score": scores})
 
     return score_shard
@@ -443,24 +451,103 @@ class SearchEngine:
     def _empty(self) -> DataFrame:
         return self.spark.createDataFrame([], RESULT_SCHEMA)
 
-    def _apply_shard_scorer(self, cand: DataFrame, scorer) -> DataFrame:
-        """Run a per-shard kernel over the candidate blocks. Multi-shard:
-        groupBy(shard_id).applyInPandas — the exchange is the scoring
-        parallelism. Single-shard (see _single_shard): the same kernel
-        over the whole candidate set in one task WITHOUT the exchange
-        (coalesce is a narrow dependency — no shuffle write/read, one
-        Spark stage instead of two); row-identical because the one group
-        applyInPandas would form IS the whole frame."""
+    def _require_positions(self, what: str = "phrase search") -> None:
+        """Refuse a positional query driver-side on an index without
+        positional postings (not as an opaque executor stack trace)."""
+        if not self.has_positions:
+            raise ValueError(
+                f"{what} needs an index built with store_positions=True "
+                "(this snapshot has positions=False)")
+
+    def _candidates(self, terms: list[str], ns: str = "",
+                    positions: bool = False) -> DataFrame:
+        """The candidate posting blocks of `terms` in field namespace `ns`:
+        a `term IN (...)` scan pushed to the term-sorted parquet (row-group
+        and bloom pruned) carrying the kernels' payload columns — the
+        positional payload only when the kernel needs it."""
+        cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
+                "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc"]
+        if positions:
+            cols.append("pos_enc")
+        src = self.postings_url if ns else self.postings
+        return src.filter(F.col("term").isin(terms)).select(*cols)
+
+    def _execute(self, cand: DataFrame, kernel,
+                 allowed: DataFrame | None = None,
+                 out_schema: str = RESULT_SCHEMA) -> DataFrame:
+        """Run a per-shard kernel ``kernel(blocks_pdf, allowed)`` over the
+        candidate blocks — the ONE place a scoring executor is chosen:
+
+        - `allowed` (a DataFrame[doc_id] whitelist) given: the candidate
+          blocks and the whitelist COGROUP by shard; the kernel gets the
+          shard's sorted uint64 doc ids (bounded per task by shard_range,
+          never collected);
+        - single-shard index (see _single_shard): the whole candidate set
+          in one task WITHOUT the exchange (coalesce is a narrow
+          dependency — no shuffle write/read, one Spark stage instead of
+          two); row-identical because the one group applyInPandas would
+          form IS the whole frame. The cost: coalesce(1) also folds the
+          postings SCAN into that one task, so a large single-shard
+          candidate set scans serially. The planned fix is choosing the
+          executor by candidate size (ROADMAP.md, open item 3); a
+          repartition(1) would add an exchange to every small query;
+        - otherwise groupBy(shard_id).applyInPandas — the exchange is the
+          scoring parallelism."""
+        if allowed is not None:
+            allowed = allowed.select(
+                F.expr(f"doc_id div {self.shard_range}").alias("shard_id"),
+                "doc_id",
+            )
+
+            def shard_allowed(left: pd.DataFrame,
+                              right: pd.DataFrame) -> pd.DataFrame:
+                if len(left) == 0 or len(right) == 0:
+                    return pd.DataFrame()
+                return kernel(left,
+                              np.sort(right["doc_id"].to_numpy(np.uint64)))
+
+            return (
+                cand.groupBy("shard_id")
+                .cogroup(allowed.groupBy("shard_id"))
+                .applyInPandas(shard_allowed, out_schema)
+            )
         if not self._single_shard:
-            return cand.groupBy("shard_id").applyInPandas(
-                scorer, RESULT_SCHEMA)
+            def shard(pdf: pd.DataFrame) -> pd.DataFrame:
+                return kernel(pdf, None)
+
+            return cand.groupBy("shard_id").applyInPandas(shard, out_schema)
 
         def one_shard(batches):
             chunks = [c for c in batches if len(c)]
             if chunks:
-                yield scorer(pd.concat(chunks, ignore_index=True))
+                yield kernel(pd.concat(chunks, ignore_index=True), None)
 
-        return cand.coalesce(1).mapInPandas(one_shard, RESULT_SCHEMA)
+        return cand.coalesce(1).mapInPandas(one_shard, out_schema)
+
+    def _merge(self, per_shard: DataFrame, k: int | None,
+               live: bool = False) -> DataFrame:
+        """Drop tombstoned docs distributed-side (`deletes` stays a DF;
+        broadcast anti-join, never collected — skipped when the scored set
+        was already restricted to a `live` whitelist), then the global
+        top-k (score desc, doc_id asc). `k` None keeps the full set."""
+        if self._tomb_counts and not live:
+            per_shard = per_shard.join(
+                F.broadcast(self.deletes), "doc_id", "left_anti"
+            )
+        if k is None:
+            return per_shard
+        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    def _score(self, spec: QuerySpec, allowed: DataFrame | None = None,
+               top: bool = True) -> DataFrame:
+        """The scoring pipeline: candidates -> per-shard kernel -> merge.
+        `allowed`: a LIVE doc-id whitelist (see :meth:`_execute`); `top`
+        False returns the full per-shard result (no global top-k)."""
+        cand = self._candidates(spec.terms, spec.ns, spec.positions)
+        per_shard = self._execute(
+            cand, _make_shard_scorer(spec, self._tomb_counts), allowed)
+        return self._merge(per_shard, spec.k if top else None,
+                           live=allowed is not None)
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         if self._df_cache is not None:
@@ -513,6 +600,117 @@ class SearchEngine:
             f"unknown scored field {field!r} (scored fields: text, url)"
         )
 
+    def _prepare(
+        self,
+        terms: list[str],
+        mode: str,
+        k: int,
+        prune: bool = True,
+        after: tuple | None = None,
+        groups: list[list[str]] | None = None,
+        slop: int = 0,
+        min_should_match: int | str = 1,
+        field: str | None = None,
+        boosts: dict[str, float] | None = None,
+        stats_override: tuple[dict, int, float] | None = None,
+    ) -> QuerySpec | None:
+        """Validate and normalize a query of the :meth:`search` family
+        (:meth:`search`, :meth:`search_filtered`, :meth:`match_ids`) into
+        a QuerySpec. None = the query provably matches nothing (a required
+        term or group is absent from the dictionary, or the msm is
+        unsatisfiable); a spec with empty `terms` = the query has no terms
+        at all (match_all for the filtered callers)."""
+        if after is not None:
+            after = (float(after[0]), int(after[1]))
+        if slop < 0 or (slop and mode != "phrase"):
+            raise ValueError("slop is only valid (>= 0) for phrase queries")
+        # ES bool minimum_should_match: >= m of the should terms must
+        # match; score stays the BM25 sum over ALL matched terms (Lucene
+        # MinShouldMatchSumScorer). Only meaningful on a disjunction —
+        # conj/phrase/groups already encode their own match requirement.
+        # A str is the full ES spec grammar ("75%", "-2", "3<90%", ...)
+        # resolved against the unique-term clause count.
+        if isinstance(min_should_match, str):
+            from picdexer_spark.query.parser import parse_min_should_match
+            min_should_match = parse_min_should_match(
+                min_should_match, len(set(terms)))
+        if min_should_match < 1:
+            raise ValueError("min_should_match must be >= 1")
+        if min_should_match > 1 and mode != "disjunctive":
+            raise ValueError(
+                "min_should_match only applies to disjunctive queries")
+        # field-scoped scoring: namespace the terms up front — everything
+        # downstream (df lookups, kernels, pruning) is namespace-blind
+        ns, n_docs_sc, avgdl_sc = self._field_stats(field)
+        if stats_override is not None:
+            if field not in (None, "text"):
+                raise ValueError(
+                    "stats_override applies to the content field only")
+            _, n_docs_sc, avgdl_sc = stats_override
+        if ns:
+            terms = [ns + t for t in terms]
+            if groups is not None:
+                groups = [[ns + t for t in g] for g in groups]
+        if (groups is not None) != (mode == "groups"):
+            raise ValueError("`groups` is required for (exactly) mode='groups'")
+        if mode == "groups":
+            groups = [sorted(set(g)) for g in groups if g]
+            if not groups:
+                return None
+            flat = [t for g in groups for t in g]
+            if len(flat) != len(set(flat)):
+                raise ValueError(
+                    "a term may appear in only one boolean group"
+                )
+            terms = flat
+        if mode not in ("conjunctive", "disjunctive", "phrase", "groups"):
+            raise ValueError(f"unknown mode {mode!r}")
+        if mode == "phrase":
+            self._require_positions()
+        uniq = sorted(set(terms))
+        if not uniq:
+            return QuerySpec(mode, [], {}, avgdl_sc, k, after=after)
+        dfs = self.term_dfs(uniq)
+        if mode in ("conjunctive", "phrase") and any(
+            t not in dfs for t in uniq
+        ):
+            return None  # a required term matches nothing
+        if mode == "groups":
+            gpres = [[t for t in g if t in dfs] for g in groups]
+            if any(not g for g in gpres):
+                return None  # a required group matches nothing
+            # degenerate shapes -> the flat kernels (identical plans)
+            if len(gpres) == 1:
+                mode, groups = "disjunctive", None
+            elif all(len(g) == 1 for g in gpres):
+                mode, groups = "conjunctive", None
+                uniq = sorted(g[0] for g in gpres)
+            else:
+                groups = gpres
+        present = [t for t in uniq if t in dfs]
+        # a doc can only match PRESENT terms, so msm > |present| is
+        # unsatisfiable (ES: an absent optional clause never matches)
+        if not present or min_should_match > len(present):
+            return None
+        if stats_override is None:
+            idf_dfs = dfs
+        else:
+            missing = [t for t in present if t not in stats_override[0]]
+            if missing:
+                raise ValueError(
+                    f"stats_override carries no df for {missing} — the "
+                    "coordinator must pre-collect every scored term")
+            idf_dfs = {t: stats_override[0][t] for t in present}
+        return QuerySpec(
+            mode, present,
+            self._idf_map(present, idf_dfs, n_docs_sc, ns, boosts),
+            avgdl_sc, k,
+            # phrase scoring needs the original term ORDER
+            ordered=list(terms) if mode == "phrase" else present,
+            ns=ns, after=after, slop=slop, msm=min_should_match,
+            groups=groups, prune=prune,
+        )
+
     def search(
         self,
         terms: list[str],
@@ -562,114 +760,11 @@ class SearchEngine:
         group (a duplicated clause would double-count in ES but not
         here — refused, not guessed). Degenerate shapes reduce to the
         flat modes so their plans and latencies are identical."""
-        if after is not None:
-            after = (float(after[0]), int(after[1]))
-        if slop < 0 or (slop and mode != "phrase"):
-            raise ValueError("slop is only valid (>= 0) for phrase queries")
-        # ES bool minimum_should_match: >= m of the should terms must
-        # match; score stays the BM25 sum over ALL matched terms (Lucene
-        # MinShouldMatchSumScorer). Only meaningful on a disjunction —
-        # conj/phrase/groups already encode their own match requirement.
-        # A str is the full ES spec grammar ("75%", "-2", "3<90%", ...)
-        # resolved against the unique-term clause count.
-        if isinstance(min_should_match, str):
-            from picdexer_spark.query.parser import parse_min_should_match
-            min_should_match = parse_min_should_match(
-                min_should_match, len(set(terms)))
-        if min_should_match < 1:
-            raise ValueError("min_should_match must be >= 1")
-        if min_should_match > 1 and mode != "disjunctive":
-            raise ValueError(
-                "min_should_match only applies to disjunctive queries")
-        # field-scoped scoring: namespace the terms up front — everything
-        # downstream (df lookups, kernels, pruning) is namespace-blind
-        ns, n_docs_sc, avgdl_sc = self._field_stats(field)
-        if stats_override is not None:
-            if field not in (None, "text"):
-                raise ValueError(
-                    "stats_override applies to the content field only")
-            _, n_docs_sc, avgdl_sc = stats_override
-        if ns:
-            terms = [ns + t for t in terms]
-            if groups is not None:
-                groups = [[ns + t for t in g] for g in groups]
-        if (groups is not None) != (mode == "groups"):
-            raise ValueError("`groups` is required for (exactly) mode='groups'")
-        if mode == "groups":
-            groups = [sorted(set(g)) for g in groups if g]
-            if not groups:
-                return self._empty()
-            flat = [t for g in groups for t in g]
-            if len(flat) != len(set(flat)):
-                raise ValueError(
-                    "a term may appear in only one boolean group"
-                )
-            terms = flat
-        if mode not in ("conjunctive", "disjunctive", "phrase", "groups"):
-            raise ValueError(f"unknown mode {mode!r}")
-        if mode == "phrase" and not self.has_positions:
-            raise ValueError(
-                "phrase search needs an index built with "
-                "store_positions=True (this snapshot has positions=False)"
-            )
-        uniq = sorted(set(terms))
-        if not uniq:
+        spec = self._prepare(terms, mode, k, prune, after, groups, slop,
+                             min_should_match, field, boosts, stats_override)
+        if spec is None or not spec.terms:
             return self._empty()
-        dfs = self.term_dfs(uniq)
-        if mode in ("conjunctive", "phrase") and any(
-            t not in dfs for t in uniq
-        ):
-            return self._empty()  # a required term matches nothing
-        if mode == "groups":
-            gpres = [[t for t in g if t in dfs] for g in groups]
-            if any(not g for g in gpres):
-                return self._empty()  # a required group matches nothing
-            # degenerate shapes -> the flat kernels (identical plans)
-            if len(gpres) == 1:
-                mode, groups = "disjunctive", None
-            elif all(len(g) == 1 for g in gpres):
-                mode, groups = "conjunctive", None
-                uniq = sorted(g[0] for g in gpres)
-            else:
-                groups = gpres
-        present = [t for t in uniq if t in dfs]
-        if not present:
-            return self._empty()
-        # a doc can only match PRESENT terms, so msm > |present| is
-        # unsatisfiable (ES: an absent optional clause never matches)
-        if min_should_match > len(present):
-            return self._empty()
-        if stats_override is None:
-            idf_dfs = dfs
-        else:
-            missing = [t for t in present if t not in stats_override[0]]
-            if missing:
-                raise ValueError(
-                    f"stats_override carries no df for {missing} — the "
-                    "coordinator must pre-collect every scored term")
-            idf_dfs = {t: stats_override[0][t] for t in present}
-        idf_map = self._idf_map(present, idf_dfs, n_docs_sc, ns, boosts)
-
-        pay_cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
-                    "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc"]
-        if mode == "phrase":
-            pay_cols.append("pos_enc")  # proximity payload only when needed
-        src = self.postings_url if ns else self.postings
-        cand = src.filter(F.col("term").isin(present)) \
-            .select(*pay_cols)
-        scorer_terms = list(terms) if mode == "phrase" else present
-        scorer = _make_shard_scorer(scorer_terms, idf_map, k, mode,
-                                    avgdl_sc, prune, self._tomb_counts,
-                                    after=after, groups=groups, slop=slop,
-                                    msm=min_should_match)
-        per_shard = self._apply_shard_scorer(cand, scorer)
-        if self._tomb_counts:
-            # drop tombstoned docs distributed-side (deletes stays a DF;
-            # broadcast anti-join — never collected)
-            per_shard = per_shard.join(
-                F.broadcast(self.deletes), "doc_id", "left_anti"
-            )
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._score(spec)
 
     def search_synonyms(
         self,
@@ -731,20 +826,10 @@ class SearchEngine:
             kernel_classes.append((rep, present))
         if not kernel_classes:
             return self._empty()
-        pay_cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
-                    "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc"]
-        src = self.postings_url if ns else self.postings
-        flat = [m for _, ms in kernel_classes for m in ms]
-        cand = src.filter(F.col("term").isin(flat)).select(*pay_cols)
-        kmode = "synonyms_conj" if mode == "conjunctive" else "synonyms"
-        scorer = _make_shard_scorer(
-            flat, idf_map, k, kmode, avgdl_sc, prune=False,
-            tomb_counts=self._tomb_counts, groups=kernel_classes)
-        per_shard = self._apply_shard_scorer(cand, scorer)
-        if self._tomb_counts:
-            per_shard = per_shard.join(
-                F.broadcast(self.deletes), "doc_id", "left_anti")
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._score(QuerySpec(
+            "synonyms_conj" if mode == "conjunctive" else "synonyms",
+            [m for _, ms in kernel_classes for m in ms], idf_map, avgdl_sc,
+            k, ns=ns, groups=kernel_classes))
 
     #: Lucene top_terms_N rewrite cap for prefix expansion (ES default 50)
     MAX_PREFIX_EXPANSIONS = 50
@@ -904,11 +989,7 @@ class SearchEngine:
         sums the fixed occurrences plus ALL expansion terms (see
         wand.score_phrase_prefix for the full pin). slop and filters are
         refused (not silently approximated). Returns (doc_id, score)."""
-        if not self.has_positions:
-            raise ValueError(
-                "phrase search needs an index built with "
-                "store_positions=True (this snapshot has positions=False)"
-            )
+        self._require_positions()
         if not terms or not terms[-1]:
             raise ValueError("match_phrase_prefix needs a non-empty stem")
         if after is not None:
@@ -917,27 +998,14 @@ class SearchEngine:
         alts = self.expand_prefix_alpha(terms[-1], max_expansions)
         if not alts:
             return self._empty()
-        uniq_fixed = sorted(set(fixed))
-        dfs = self.term_dfs(sorted(set(uniq_fixed) | set(alts)))
-        if any(t not in dfs for t in uniq_fixed):
+        qterms = sorted(set(fixed) | set(alts))
+        dfs = self.term_dfs(qterms)
+        if any(t not in dfs for t in fixed):
             return self._empty()  # a required fixed term matches nothing
         idf_map = {t: idf(self.n_docs_scoring, d) for t, d in dfs.items()}
-        pay_cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
-                    "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc",
-                    "pos_enc"]
-        qterms = sorted(set(uniq_fixed) | set(alts))
-        cand = self.postings.filter(F.col("term").isin(qterms)) \
-            .select(*pay_cols)
-        scorer = _make_shard_scorer(
-            fixed, idf_map, k, "phrase_prefix", self.avgdl_scoring, prune,
-            self._tomb_counts, after=after, alts=alts,
-        )
-        per_shard = self._apply_shard_scorer(cand, scorer)
-        if self._tomb_counts:
-            per_shard = per_shard.join(
-                F.broadcast(self.deletes), "doc_id", "left_anti"
-            )
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._score(QuerySpec(
+            "phrase_prefix", qterms, idf_map, self.avgdl_scoring, k,
+            ordered=fixed, after=after, alts=alts, prune=prune))
 
     def _vocab_arrays(self):
         """Char-code matrix over the cached vocabulary for the vectorized
@@ -1789,104 +1857,25 @@ class SearchEngine:
                                groups=groups, slop=slop,
                                min_should_match=min_should_match,
                                field=field, boosts=boosts)
-        if after is not None:
-            after = (float(after[0]), int(after[1]))
         cond = self._filter_cond(filters)  # validates fields/ops/values
-        if slop < 0 or (slop and mode != "phrase"):
-            raise ValueError("slop is only valid (>= 0) for phrase queries")
-        if isinstance(min_should_match, str):
-            from picdexer_spark.query.parser import parse_min_should_match
-            min_should_match = parse_min_should_match(
-                min_should_match, len(set(terms)))
-        if min_should_match < 1:
-            raise ValueError("min_should_match must be >= 1")
-        if min_should_match > 1 and mode != "disjunctive":
-            raise ValueError(
-                "min_should_match only applies to disjunctive queries")
-        ns, n_docs_sc, avgdl_sc = self._field_stats(field)
-        if ns:
-            terms = [ns + t for t in terms]
-            if groups is not None:
-                groups = [[ns + t for t in g] for g in groups]
-        if (groups is not None) != (mode == "groups"):
-            raise ValueError("`groups` is required for (exactly) mode='groups'")
-        if mode == "groups":
-            groups = [sorted(set(g)) for g in groups if g]
-            if not groups:
-                return self._empty()
-            flat = [t for g in groups for t in g]
-            if len(flat) != len(set(flat)):
-                raise ValueError(
-                    "a term may appear in only one boolean group"
-                )
-            terms = flat
-        if mode not in ("conjunctive", "disjunctive", "phrase", "groups"):
-            raise ValueError(f"unknown mode {mode!r}")
-        if mode == "phrase" and not self.has_positions:
-            raise ValueError(
-                "phrase search needs an index built with "
-                "store_positions=True (this snapshot has positions=False)"
-            )
+        spec = self._prepare(terms, mode, k, prune, after, groups, slop,
+                             min_should_match, field, boosts)
+        if spec is None:
+            return self._empty()
         live = self.cat.read_live_docs(self.spark, self.snapshot_id)
-        uniq = sorted(set(terms))
-        if not uniq:
+        if not spec.terms:
             # filter-only discover query: match_all within the filter
             # (the Lucene constant-score contract, _score = 1.0); all
             # scores tie so the search_after cursor reduces to doc_id
             base = live.filter(cond)
-            if after is not None:
-                base = base.filter(F.col("doc_id") > F.lit(int(after[1])))
+            if spec.after is not None:
+                base = base.filter(F.col("doc_id") > F.lit(spec.after[1]))
             return (
                 base.select("doc_id", F.lit(1.0).alias("score"))
                 .orderBy(F.asc("doc_id"))
                 .limit(k)
             )
-        dfs = self.term_dfs(uniq)
-        if mode in ("conjunctive", "phrase") and any(
-            t not in dfs for t in uniq
-        ):
-            return self._empty()
-        if mode == "groups":
-            gpres = [[t for t in g if t in dfs] for g in groups]
-            if any(not g for g in gpres):
-                return self._empty()  # a required group matches nothing
-            if len(gpres) == 1:
-                mode, groups = "disjunctive", None
-            elif all(len(g) == 1 for g in gpres):
-                mode, groups = "conjunctive", None
-                uniq = sorted(g[0] for g in gpres)
-            else:
-                groups = gpres
-        present = [t for t in uniq if t in dfs]
-        if not present:
-            return self._empty()
-        if min_should_match > len(present):
-            return self._empty()  # unsatisfiable, see search()
-        idf_map = self._idf_map(present, dfs, n_docs_sc, ns, boosts)
-
-        allowed = live.filter(cond).select(
-            F.expr(f"doc_id div {self.shard_range}").alias("shard_id"),
-            "doc_id",
-        )
-        pay_cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
-                    "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc"]
-        if mode == "phrase":
-            pay_cols.append("pos_enc")
-        cand = (self.postings_url if ns else self.postings) \
-            .filter(F.col("term").isin(present)) \
-            .select(*pay_cols)
-        scorer_terms = list(terms) if mode == "phrase" else present
-        scorer = _make_filtered_shard_scorer(scorer_terms, idf_map, k, mode,
-                                             avgdl_sc, prune,
-                                             after=after, groups=groups,
-                                             slop=slop,
-                                             msm=min_should_match)
-        per_shard = (
-            cand.groupBy("shard_id")
-            .cogroup(allowed.groupBy("shard_id"))
-            .applyInPandas(scorer, RESULT_SCHEMA)
-        )
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._score(spec, allowed=live.filter(cond))
 
     def match_ids(
         self,
@@ -1917,92 +1906,26 @@ class SearchEngine:
         `with_scores=True` returns DataFrame[doc_id, score] — the FULL
         scored match set, still never globally sorted or collected (the
         multi_match combiner consumes this shape)."""
-        if (groups is not None) != (mode == "groups"):
-            raise ValueError("`groups` is required for (exactly) mode='groups'")
-        ns, n_docs_sc, avgdl_sc = self._field_stats(field)
-        if ns:
-            terms = [ns + t for t in terms]
-            if groups is not None:
-                groups = [[ns + t for t in g] for g in groups]
-        if mode == "groups":
-            groups = [sorted(set(g)) for g in groups if g]
-            if not groups:
-                return self.spark.createDataFrame([], "doc_id long")
-            terms = [t for g in groups for t in g]
-        if mode not in ("conjunctive", "disjunctive", "phrase", "groups"):
-            raise ValueError(f"unknown mode {mode!r}")
-        if mode == "phrase" and not self.has_positions:
-            raise ValueError(
-                "phrase search needs an index built with "
-                "store_positions=True (this snapshot has positions=False)"
-            )
         cond = self._filter_cond(filters) if filters else None
+        # k = shard_range: the shard "top-k" is its full match set
+        spec = self._prepare(terms, mode, self.shard_range, prune=False,
+                             groups=groups, slop=slop, field=field)
+        out_cols = ["doc_id", "score"] if with_scores else ["doc_id"]
+        if spec is None:
+            return self._empty().select(*out_cols)
         # the live-docs view costs a driver-side file listing per
         # construction — build it only on the branches that consume it
         # (filters / match_all), not for every term query
         live = None
-        if cond is not None or not sorted(set(terms)):
+        if cond is not None or not spec.terms:
             live = self.cat.read_live_docs(self.spark, self.snapshot_id)
-        out_cols = ["doc_id", "score"] if with_scores else ["doc_id"]
-        empty_schema = ("doc_id long, score double" if with_scores
-                        else "doc_id long")
-        uniq = sorted(set(terms))
-        if not uniq:
-            base = live.filter(cond) if cond is not None else live
-            if with_scores:
-                # match_all is constant-score (Lucene _score = 1.0)
-                return base.select("doc_id", F.lit(1.0).alias("score"))
-            return base.select("doc_id")
-        dfs = self.term_dfs(uniq)
-        if mode in ("conjunctive", "phrase") and any(
-            t not in dfs for t in uniq
-        ):
-            return self.spark.createDataFrame([], empty_schema)
-        if mode == "groups":
-            gpres = [[t for t in g if t in dfs] for g in groups]
-            if any(not g for g in gpres):
-                return self.spark.createDataFrame([], empty_schema)
-            if len(gpres) == 1:
-                mode, groups = "disjunctive", None
-            elif all(len(g) == 1 for g in gpres):
-                mode, groups = "conjunctive", None
-                uniq = sorted(g[0] for g in gpres)
-            else:
-                groups = gpres
-        present = [t for t in uniq if t in dfs]
-        if not present:
-            return self.spark.createDataFrame([], empty_schema)
-        idf_map = {t: idf(n_docs_sc, dfs[t]) for t in present}
-        pay_cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
-                    "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc"]
-        if mode == "phrase":
-            pay_cols.append("pos_enc")
-        cand = (self.postings_url if ns else self.postings) \
-            .filter(F.col("term").isin(present)) \
-            .select(*pay_cols)
-        scorer_terms = list(terms) if mode == "phrase" else present
-        if cond is not None:
-            allowed = live.filter(cond).select(
-                F.expr(f"doc_id div {self.shard_range}").alias("shard_id"),
-                "doc_id",
-            )
-            scorer = _make_filtered_shard_scorer(
-                scorer_terms, idf_map, self.shard_range, mode, avgdl_sc,
-                prune=False, groups=groups, slop=slop)
-            per_shard = (
-                cand.groupBy("shard_id")
-                .cogroup(allowed.groupBy("shard_id"))
-                .applyInPandas(scorer, RESULT_SCHEMA)
-            )
-            return per_shard.select(*out_cols)  # whitelist is already live
-        scorer = _make_shard_scorer(scorer_terms, idf_map, self.shard_range,
-                                    mode, avgdl_sc, prune=False,
-                                    groups=groups, slop=slop)
-        per_shard = self._apply_shard_scorer(cand, scorer)
-        out = per_shard.select(*out_cols)
-        if self._tomb_counts:
-            out = out.join(F.broadcast(self.deletes), "doc_id", "left_anti")
-        return out
+            if cond is not None:
+                live = live.filter(cond)
+        if not spec.terms:
+            # match_all is constant-score (Lucene _score = 1.0)
+            return live.select("doc_id", F.lit(1.0).alias("score")) \
+                .select(*out_cols)
+        return self._score(spec, live, top=False).select(*out_cols)
 
     def count(self, terms: list[str], mode: str = "disjunctive",
               filters: list = (), groups: list[list[str]] | None = None
@@ -2388,11 +2311,10 @@ class SearchEngine:
         idf_map = self._idf_map(present, dfs, n_docs_sc, ns, boosts)
         d = int(doc_id)
         shard = d // self.shard_range
-        cand = (self.postings_url if ns else self.postings).filter(
-            F.col("term").isin(present) & (F.col("shard_id") == shard)
+        cand = self._candidates(present, ns).filter(
+            (F.col("shard_id") == shard)
             & (F.col("first_doc") <= d) & (F.col("last_doc") >= d)
-        ).select("term", "first_doc", "last_doc", "max_tf", "min_dl",
-                 "doc_ids_enc", "tfs_enc", "dls_enc")
+        )
 
         def decode(it):
             want = np.array([d], np.uint64)
@@ -2495,36 +2417,29 @@ class SearchEngine:
         uniq = sorted(set(terms))
         if not uniq:
             return self._empty()
-        # per-field spec: (namespace, present namespaced terms, idf map,
-        # avgdl) — all driver-side metadata
+        # one disjunctive spec per field: its namespace, present terms, idf
+        # map and avgdl — all driver-side metadata
         specs = []
         for f_ in fields:
             ns, n_docs_sc, avgdl_sc = self._field_stats(f_)
-            ts = [ns + t for t in uniq]
-            dfs = self.term_dfs(ts)
-            present = sorted(t for t in ts if t in dfs)
-            if not present:
-                continue
-            idf_map = {t: idf(n_docs_sc, dfs[t]) for t in present}
-            specs.append((ns, present, idf_map, float(avgdl_sc)))
+            dfs = self.term_dfs([ns + t for t in uniq])
+            present = [ns + t for t in uniq if ns + t in dfs]
+            if present:
+                specs.append(QuerySpec(
+                    "disjunctive", present,
+                    {t: idf(n_docs_sc, dfs[t]) for t in present},
+                    float(avgdl_sc), k, ns=ns))
         if not specs:
             return self._empty()
-        pay_cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
-                    "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc"]
-        cands = []
-        for ns, present, _im, _ad in specs:
-            src = self.postings_url if ns else self.postings
-            cands.append(src.filter(F.col("term").isin(present))
-                         .select(*pay_cols))
-        cand = cands[0]
-        for c in cands[1:]:
-            cand = cand.unionByName(c)
+        cand = self._candidates(specs[0].terms, specs[0].ns)
+        for sp in specs[1:]:
+            cand = cand.unionByName(self._candidates(sp.terms, sp.ns))
         tomb_counts = self._tomb_counts
         tie = float(tie_breaker)
         mt = match_type
         uniq_terms = uniq  # un-namespaced, ascending
 
-        def mm_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        def mm_shard(pdf: pd.DataFrame, _allowed) -> pd.DataFrame:
             blocks = _blocks_from_pdf(pdf)
             k_eff = k + tomb_counts.get(int(pdf["shard_id"].iat[0]), 0)
             if mt == "cross_fields":
@@ -2534,12 +2449,12 @@ class SearchEngine:
                 for t in uniq_terms:
                     best_ids = np.zeros(0, np.int64)
                     best = np.zeros(0, np.float64)
-                    for ns, present, idf_map, avgdl_f in specs:
-                        tn = ns + t
-                        if tn not in idf_map:
+                    for sp in specs:
+                        tn = sp.ns + t
+                        if tn not in sp.idf_map:
                             continue
                         ids_f, sc_f = field_match_scores(
-                            [tn], blocks, idf_map, K1, B, avgdl_f)
+                            [tn], blocks, sp.idf_map, K1, B, sp.avgdl)
                         m_ids = np.union1d(best_ids, ids_f)
                         m_best = np.full(m_ids.size, -np.inf)
                         p0 = np.searchsorted(m_ids, best_ids)
@@ -2559,9 +2474,9 @@ class SearchEngine:
                 all_ids = np.zeros(0, np.int64)
                 s_sum = np.zeros(0, np.float64)
                 s_max = np.zeros(0, np.float64)
-                for ns, present, idf_map, avgdl_f in specs:
+                for sp in specs:
                     ids_f, sc_f = field_match_scores(
-                        present, blocks, idf_map, K1, B, avgdl_f)
+                        sp.terms, blocks, sp.idf_map, K1, B, sp.avgdl)
                     if ids_f.size == 0:
                         continue
                     m_ids = np.union1d(all_ids, ids_f)
@@ -2583,12 +2498,7 @@ class SearchEngine:
             return pd.DataFrame({"doc_id": ids[order],
                                  "score": scores[order]})
 
-        per_shard = self._apply_shard_scorer(cand, mm_shard)
-        if tomb_counts:
-            per_shard = per_shard.join(
-                F.broadcast(self.deletes), "doc_id", "left_anti"
-            )
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._merge(self._execute(cand, mm_shard), k)
 
     def span_first(self, term: str, end: int, k: int = 10) -> DataFrame:
         """ES `span_first` query: the term must occur within the first
@@ -2710,36 +2620,15 @@ class SearchEngine:
         positions ONLY for blocks containing requested docs
         (TermBlocks.positions_flat), so cost scales with the highlight set,
         not the posting lists."""
-        if not self.has_positions:
-            raise ValueError(
-                "term_offsets needs an index built with "
-                "store_positions=True (this snapshot has positions=False)"
-            )
+        self._require_positions("term_offsets")
         out_schema = "doc_id long, term string, pos long"
         uniq = sorted(set(terms))
         dfs = self.term_dfs(uniq)
         present = [t for t in uniq if t in dfs]
         if not present:
             return self.spark.createDataFrame([], out_schema)
-        cand = self.postings.filter(F.col("term").isin(present)).select(
-            "term", "shard_id", "first_doc", "last_doc", "max_tf",
-            "min_dl", "doc_ids_enc", "tfs_enc", "dls_enc", "pos_enc",
-        )
-        allowed = match.select(
-            F.expr(f"doc_id div {self.shard_range}").alias("shard_id"),
-            "doc_id",
-        )
-
-        def offsets_shard(left: pd.DataFrame,
-                          right: pd.DataFrame) -> pd.DataFrame:
-            if len(left) == 0 or len(right) == 0:
-                return pd.DataFrame({
-                    "doc_id": np.zeros(0, np.int64),
-                    "term": np.zeros(0, object),
-                    "pos": np.zeros(0, np.int64),
-                })
-            want = np.sort(right["doc_id"].to_numpy(np.uint64))
-            blocks = _blocks_from_pdf(left)
+        def offsets_shard(pdf: pd.DataFrame, want) -> pd.DataFrame:
+            blocks = _blocks_from_pdf(pdf)
             d_out, t_out, p_out = [], [], []
             for t in sorted(blocks):
                 d, p = blocks[t].positions_flat(want)
@@ -2748,22 +2637,16 @@ class SearchEngine:
                     t_out.append(np.full(d.size, t, object))
                     p_out.append(p.astype(np.int64))
             if not d_out:
-                return pd.DataFrame({
-                    "doc_id": np.zeros(0, np.int64),
-                    "term": np.zeros(0, object),
-                    "pos": np.zeros(0, np.int64),
-                })
+                return pd.DataFrame()
             return pd.DataFrame({
                 "doc_id": np.concatenate(d_out),
                 "term": np.concatenate(t_out),
                 "pos": np.concatenate(p_out),
             })
 
-        return (
-            cand.groupBy("shard_id")
-            .cogroup(allowed.groupBy("shard_id"))
-            .applyInPandas(offsets_shard, out_schema)
-        )
+        return self._execute(self._candidates(present, positions=True),
+                             offsets_shard, allowed=match,
+                             out_schema=out_schema)
 
     def search_highlight(
         self,
@@ -3240,26 +3123,20 @@ class SearchEngine:
         (query_id, rank, doc_id, score), row-identical to the window
         formulation.
         """
-        import pandas as pd
-
         modes = {q.get("mode") for q in queries}
         bad = modes - {"conjunctive", "disjunctive", "phrase"}
         if bad:
             raise ValueError(f"unknown query mode(s) {sorted(bad)!r}")
         any_phrase = "phrase" in modes
-        if any_phrase and not self.has_positions:
-            raise ValueError(
-                "phrase search needs an index built with "
-                "store_positions=True (this snapshot has positions=False)"
-            )
+        if any_phrase:
+            self._require_positions()
+        out_schema = "query_id long, rank int, doc_id long, score double"
         all_terms = sorted({t for q in queries for t in set(q["terms"])})
         if not all_terms:
-            return self.spark.createDataFrame(
-                [], "query_id long, rank int, doc_id long, score double"
-            )
+            return self.spark.createDataFrame([], out_schema)
         dfs = self.term_dfs(all_terms)
         idf_map = {t: idf(self.n_docs_scoring, d) for t, d in dfs.items()}
-        qspecs = []
+        specs: dict[int, QuerySpec] = {}
         for q in queries:
             if int(q.get("slop") or 0) and q["mode"] != "phrase":
                 raise ValueError("slop is only valid for phrase queries")
@@ -3269,90 +3146,57 @@ class SearchEngine:
                     len(present) < len(uniq):
                 continue  # a required term matches nothing anywhere
             if present:
-                # phrase scoring needs the original term ORDER; conj/disj
-                # score over the deduped ascending set
-                sterms = list(q["terms"]) if q["mode"] == "phrase" else present
-                slop = int(q.get("slop") or 0)
-                qspecs.append(
-                    (int(q["query_id"]), present, sterms, q["mode"],
-                     int(q["k"]), slop)
+                specs[int(q["query_id"])] = QuerySpec(
+                    q["mode"], present, idf_map, self.avgdl_scoring,
+                    int(q["k"]),
+                    # phrase scoring needs the original term ORDER
+                    ordered=(list(q["terms"]) if q["mode"] == "phrase"
+                             else present),
+                    slop=int(q.get("slop") or 0), prune=prune,
                 )
-        if not qspecs:
-            return self.spark.createDataFrame(
-                [], "query_id long, rank int, doc_id long, score double"
-            )
-        avgdl = self.avgdl_scoring
-        spec_by_qid = {qid: (sterms, mode, k, slop)
-                       for qid, _present, sterms, mode, k, slop in qspecs}
+        if not specs:
+            return self.spark.createDataFrame([], out_schema)
         tomb_counts = self._tomb_counts
+        # one shard, no tombstones: each (shard, query) kernel's output IS
+        # that query's exact global top-k, already in final order (the
+        # kernels end in _topk's (score desc, doc_id asc) lexsort) — emit
+        # ranks directly and skip the per-query merge kernel and its
+        # exchange entirely
+        ranked = self._single_shard and not tomb_counts
 
         def score_query_shard(pdf: pd.DataFrame) -> pd.DataFrame:
             qid = int(pdf["query_id"].iat[0])
-            terms, mode, k, slop = spec_by_qid[qid]
-            blocks = _blocks_from_pdf(pdf)
-            k_eff = k + tomb_counts.get(int(pdf["shard_id"].iat[0]), 0)
-            ids, scores = _score_blocks(
-                mode, sorted(set(terms)), list(terms), blocks, idf_map,
-                avgdl, k_eff, prune, slop=slop,
-            )
-            return pd.DataFrame(
-                {"query_id": qid, "doc_id": ids, "score": scores}
-            )
+            spec = specs[qid]
+            k_eff = spec.k + tomb_counts.get(int(pdf["shard_id"].iat[0]), 0)
+            ids, scores = _score_blocks(spec, _blocks_from_pdf(pdf), k_eff)
+            out = pd.DataFrame({"query_id": qid, "doc_id": ids,
+                                "score": scores})
+            if ranked:
+                out.insert(1, "rank",
+                           np.arange(1, ids.size + 1, dtype=np.int32))
+            return out
 
         qterms = self.spark.createDataFrame(
-            [(qid, t) for qid, present, _s, _m, _k, _sl in qspecs
-             for t in present],
+            [(qid, t) for qid, spec in specs.items() for t in spec.terms],
             "query_id long, term string",
         )
-        cand = self.postings.filter(F.col("term").isin(all_terms))
-        pay_cols = ["term", "shard_id", "first_doc", "last_doc", "max_tf",
-                    "min_dl", "n", "doc_ids_enc", "tfs_enc", "dls_enc"]
-        if any_phrase:
-            pay_cols.append("pos_enc")
-        grouped = (
-            cand.select(*pay_cols)
+        per_shard = (
+            self._candidates(all_terms, positions=any_phrase)
             .join(F.broadcast(qterms), "term")
             .groupBy("shard_id", "query_id")
+            .applyInPandas(score_query_shard, out_schema if ranked else
+                           "query_id long, doc_id long, score double")
         )
-        out_schema = "query_id long, rank int, doc_id long, score double"
-        if self._single_shard and not tomb_counts:
-            # one shard, no tombstones: each (shard, query) kernel's output
-            # IS that query's exact global top-k, already in final order
-            # (the kernels end in _topk's (score desc, doc_id asc)
-            # lexsort) — emit ranks directly and skip the per-query merge
-            # kernel and its exchange entirely
-            def score_query_ranked(pdf: pd.DataFrame) -> pd.DataFrame:
-                qid = int(pdf["query_id"].iat[0])
-                terms, mode, k, slop = spec_by_qid[qid]
-                blocks = _blocks_from_pdf(pdf)
-                ids, scores = _score_blocks(
-                    mode, sorted(set(terms)), list(terms), blocks, idf_map,
-                    avgdl, k, prune, slop=slop,
-                )
-                return pd.DataFrame({
-                    "query_id": qid,
-                    "rank": np.arange(1, ids.size + 1, dtype=np.int32),
-                    "doc_id": ids,
-                    "score": scores,
-                })
-
-            return grouped.applyInPandas(score_query_ranked, out_schema)
-        per_shard = grouped.applyInPandas(
-            score_query_shard, "query_id long, doc_id long, score double"
-        )
-        if tomb_counts:
-            per_shard = per_shard.join(
-                F.broadcast(self.deletes), "doc_id", "left_anti"
-            )
-        k_by_qid = {qid: k for qid, _p, _s, _m, k, _sl in qspecs}
+        if ranked:
+            return per_shard
+        per_shard = self._merge(per_shard, None)
 
         def topk_query(pdf: pd.DataFrame) -> pd.DataFrame:
             qid = int(pdf["query_id"].iat[0])
-            k = k_by_qid[qid]
             ids = pdf["doc_id"].to_numpy(np.int64)
             sc = pdf["score"].to_numpy(np.float64)
             # exact Spark sort-key order: score desc, doc_id asc
-            order = np.lexsort((ids, -sc))[:k]
+            order = np.lexsort((ids, -sc))[:specs[qid].k]
             return pd.DataFrame({
                 "query_id": qid,
                 "rank": np.arange(1, order.size + 1, dtype=np.int32),

@@ -34,13 +34,6 @@ def _score_part(
     return idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
-def block_ub(max_tf: float, min_dl: float, idf: float, k1: float, b: float,
-             avgdl: float) -> float:
-    return float(
-        idf * (max_tf * (k1 + 1.0)) / (max_tf + k1 * (1.0 - b + b * min_dl / avgdl))
-    )
-
-
 def block_ub_vec(max_tf: np.ndarray, min_dl: np.ndarray, idf: float,
                  k1: float, b: float, avgdl: float) -> np.ndarray:
     """Vectorized per-block upper bounds (one numpy expression, not a
@@ -222,12 +215,6 @@ class TermBlocks:
             + np.uint64(1)
         dls = varint_decode(b"".join(bytes(e[2]) for e in sel))
         return ids, tfs, dls
-
-    def blocks_overlapping(self, lo: int, hi: int) -> np.ndarray:
-        """Indices of blocks intersecting [lo, hi] (inclusive)."""
-        i0 = int(np.searchsorted(self.last, lo, side="left"))
-        i1 = int(np.searchsorted(self.first, hi, side="right"))
-        return np.arange(i0, i1)
 
     def lookup(self, cand: np.ndarray):
         """(tf, dl, mask) for candidate doc_ids (sorted uint64)."""
@@ -505,7 +492,8 @@ def score_disjunctive(
         return _bulk()
 
     # CHUNKED sweep (round 7): segments are processed in descending-ub
-    # CHUNKS of 64 with all bookkeeping vectorized, instead of one Python
+    # chunks (8 segments first, each next chunk twice the size) with all
+    # bookkeeping vectorized, instead of one Python
     # iteration (decode + unique + topk) per segment. The per-segment
     # formulation cost ~85 us of fixed Python per segment and ran them ALL
     # whenever theta never caught the ub tail (measured 135 ms vs 26 ms

@@ -407,23 +407,72 @@ def test_search_indices_plan_one_global_takeordered(spark, tmp_path):
     assert plan.count("Union") == 1
 
 
-def test_single_shard_query_skips_exchange(spark, tmp_path_factory):
-    """A single-shard index (every doc id below shard_range) scores flat
-    queries WITHOUT the groupBy(shard_id) exchange — coalesce into the one
-    task the group would land in anyway — and the results are identical to
-    the grouped path."""
-    from picdexer_spark.index.build import IndexConfig, build_index
-    from picdexer_spark.query.bm25 import SearchEngine
-
+@pytest.fixture(scope="module")
+def single_shard_engine(spark, tmp_path_factory):
+    """One module-scoped single-shard index (every doc id below
+    shard_range), positional so every scoring entry point can run."""
     idx = str(tmp_path_factory.mktemp("ss_idx"))
     pages = spark.createDataFrame(gen_pages(300, seed=21))
-    build_index(spark, pages, idx, IndexConfig(shard_range=1 << 16))
+    build_index(spark, pages, idx,
+                IndexConfig(shard_range=1 << 16, store_positions=True))
     eng = SearchEngine(spark, idx)
     assert eng._single_shard
-    plan = eng.search(["w0", "w3"], "disjunctive", 10)
-    # only the final top-k exchange remains
+    return eng
+
+
+def _after_cursor(eng):
+    """The search_after cursor of the 5th hit of the disjunctive page."""
+    r = eng.search(["w0", "w3"], "disjunctive", 5).collect()[-1]
+    return (r["score"], r["doc_id"])
+
+
+SINGLE_SHARD_QUERIES = {
+    "search-disjunctive":
+        lambda e: e.search(["w0", "w3"], "disjunctive", 10),
+    "search-conjunctive":
+        lambda e: e.search(["w1", "w4"], "conjunctive", 10),
+    "search-phrase": lambda e: e.search(["w0", "w1"], "phrase", 10),
+    "search-groups": lambda e: e.search(
+        [], "groups", 10, groups=[["w0", "w1"], ["w2", "w3"]]),
+    "search-msm2": lambda e: e.search(
+        ["w2", "w5", "w9"], "disjunctive", 10, min_should_match=2),
+    "search-after": lambda e: e.search(
+        ["w0", "w3"], "disjunctive", 10, after=_after_cursor(e)),
+    "search_synonyms": lambda e: e.search_synonyms(
+        ["w0", "w2"], [["w0", "w1"]], "disjunctive", 10),
+    "match_phrase_prefix": lambda e: e.match_phrase_prefix(["w0", "w1"], 10),
+    "multi_match-most_fields": lambda e: e.multi_match(
+        ["w0", "https"], 10, "most_fields"),
+    "multi_match-best_fields": lambda e: e.multi_match(
+        ["w0", "https"], 10, "best_fields", tie_breaker=0.3),
+    "multi_match-cross_fields": lambda e: e.multi_match(
+        ["w0", "https"], 10, "cross_fields"),
+    "match_ids-with_scores": lambda e: e.match_ids(
+        ["w0", "w3"], "disjunctive", with_scores=True),
+}
+
+
+@pytest.mark.parametrize("entry", list(SINGLE_SHARD_QUERIES))
+def test_single_shard_query_skips_exchange(single_shard_engine, entry):
+    """A single-shard index scores WITHOUT the groupBy(shard_id) exchange —
+    coalesce into the one task the group would land in anyway — on every
+    scoring entry point, and the results are identical to the grouped
+    path."""
+    eng, query = single_shard_engine, SINGLE_SHARD_QUERIES[entry]
+    plan = query(eng)
+    # at most the final top-k exchange remains
     assert count_exchanges(plan) <= 1, explain_str(plan, "simple")
-    fast = eng.search_topk(["w0", "w3"], "disjunctive", 10)
+    fast = [tuple(r) for r in plan.collect()]
     eng._single_shard = False
-    grouped = eng.search_topk(["w0", "w3"], "disjunctive", 10)
-    assert fast == grouped and len(fast) == 10
+    try:
+        grouped_plan = query(eng)
+        grouped = [tuple(r) for r in grouped_plan.collect()]
+    finally:
+        eng._single_shard = True
+    # the skipped exchange is the per-shard one the grouped path needs
+    assert count_exchanges(plan) < count_exchanges(grouped_plan)
+    if entry.startswith("match_ids"):  # the full, unordered match set
+        fast, grouped = sorted(fast), sorted(grouped)
+    else:
+        assert len(fast) == 10
+    assert fast == grouped and fast

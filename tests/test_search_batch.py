@@ -7,6 +7,7 @@ import pytest
 from picdexer_spark.fixtures.pages import gen_pages, gen_queries
 from picdexer_spark.index.build import IndexConfig, build_index
 from picdexer_spark.oracle.reference import OracleIndex
+from picdexer_spark.plans.audit import count_exchanges, explain_str
 from picdexer_spark.query.bm25 import SearchEngine
 from picdexer_spark.query.wand import (
     TermBlocks,
@@ -240,7 +241,10 @@ def test_batch_single_shard_fast_path_identical(spark, tmp_path_factory):
             for r in df.collect()
         )
 
-    fast = rows(eng.search_batch(queries))
+    fast_plan = eng.search_batch(queries)
+    # the one (shard_id, query_id) exchange; no per-query merge exchange
+    assert count_exchanges(fast_plan) == 1, explain_str(fast_plan, "simple")
+    fast = rows(fast_plan)
     eng._single_shard = False
     general = rows(eng.search_batch(queries))
     assert fast == general and len(fast) == 12
